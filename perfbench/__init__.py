@@ -1,0 +1,1 @@
+"""Extraction benchmark: run ``python3 perfbench/run.py --help``."""
