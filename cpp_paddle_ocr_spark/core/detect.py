@@ -52,9 +52,9 @@ from .html_parse import Block
 
 # Stopword membership, vectorized: every stopword is ≤ _STOP_MAXLEN chars of
 # pure a-z, so a token can be packed into an int64 (5 bits per char) and
-# matched with one sorted np.isin — no per-token Python in the det kernel.
+# matched with one sorted np.isin — no per-token Python in the det kernel
+# (tests/test_detect.py pins that shape of STOPWORDS).
 _STOP_MAXLEN = max(len(w) for w in STOPWORDS)
-assert all(len(w) <= 12 and w.isascii() and w.islower() and w.isalpha() for w in STOPWORDS)
 
 
 def _pack_word(w: str) -> int:
@@ -92,7 +92,6 @@ _CLS_TABLE[65:91] = _CLS_UPPER
 _CLS_TABLE[97:123] = _CLS_LOWER
 _CLS_TABLE[48:58] = _CLS_DIGIT
 _CLS_TABLE[_WS_TABLE] = _CLS_WS
-assert bool(np.array_equal(_CLS_TABLE == _CLS_WS, _WS_TABLE))
 
 
 @dataclass(slots=True)
@@ -308,7 +307,7 @@ def detect_page(
     if cp.size == 0:
         return []
     cls = _CLS_TABLE[cp]
-    ws = cls == _CLS_WS  # == ws_mask(cp), asserted at import
+    ws = cls == _CLS_WS  # == ws_mask(cp), pinned by tests/test_detect.py
     tstarts, tends = _token_runs(~ws)
     n = tstarts.size
     if n == 0:

@@ -69,18 +69,13 @@ def _error_row(url: str, error: str) -> dict[str, Any]:
 
 def decode_html(html: bytes | None) -> tuple[str | None, str | None]:
     """Transport guards + decode (S2/P6): → (doc, error), never raises."""
-    if html is None or len(html) == 0:
-        return None, "empty html"
-    if len(html) > MAX_HTML_BYTES:
-        return (
-            None,
-            f"oversized html ({len(html)} bytes > {MAX_HTML_BYTES}); "
-            "route via dedicated range partition",
-        )
+    route = route_of(html)
+    if route != ROUTE_WORK:
+        return None, _guard_error(route, len(html or b""))
     try:
         doc = bytes(html).decode("utf-8")
     except (UnicodeDecodeError, ValueError):
-        return None, "undecodable html (invalid utf-8)"
+        return None, _guard_error(ROUTE_INVALID, len(html))
     return doc[:MAX_DOC_CHARS], None  # D1 limit_side_len analog
 
 

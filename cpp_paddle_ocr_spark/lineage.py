@@ -6,14 +6,16 @@ processing time — ``include/paddle_ocr/ocr_ipc_service.h:91-93``,
 
 * pages are assigned to ``n_buckets`` deterministic **lineage buckets** by
   ``pmod(xxhash64(url), n_buckets)`` — the unit of commit/retry;
-* buckets are processed in ``n_groups`` commit groups; after each group the
-  output is durably written (dynamic partition overwrite on ``bucket``) and a
-  lineage row per bucket is appended — only then is the bucket "committed";
-* on restart the job anti-joins the lineage table and processes only
-  uncommitted buckets. Partial files from a crashed group sit in partition
-  dirs that get dynamically overwritten on retry, so retries are idempotent:
-  re-extraction of a bucket is byte-identical (core is deterministic) and
-  replaces, never duplicates.
+* buckets are processed in ``n_groups`` commit groups, and each group
+  commits with exactly two writes: its extracted partitions (dynamic
+  partition overwrite on ``bucket``), then its lineage rows — one per bucket
+  of the group, built on the driver from a per-bucket count collect, zeros
+  for empty buckets. Only after the second write is a bucket "committed";
+* on restart the job reads the run's committed buckets from the lineage
+  table and processes only the rest. Partial files from a crashed group sit
+  in partition dirs that get dynamically overwritten on retry, so retries
+  are idempotent: re-extraction of a bucket is byte-identical (core is
+  deterministic) and replaces, never duplicates.
 
 This gives resume-from-checkpoint with at-least-once work and exactly-once
 visible results — the Spark-native warm-restart analog of the reference's
@@ -25,10 +27,18 @@ from __future__ import annotations
 import logging
 import time
 import uuid
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.storagelevel import StorageLevel
 
 from .config import LINEAGE_BUCKETS
+from .iceberg import (
+    CATALOG,
+    _is_table_ident,
+    iceberg_available,
+    overwrite_result_partitions,
+)
 from .operators.extract import extract
 from .schemas import LINEAGE_SCHEMA
 
@@ -80,8 +90,6 @@ def _bucket_col(n_buckets: int):
 def _child_target(out_dir: str, name: str) -> str:
     """Child sink target: ``{out_dir}_{name}`` for Iceberg table identifiers
     (dotted names can't nest a path), ``{out_dir}/{name}`` for paths."""
-    from .iceberg import _is_table_ident
-
     if _is_table_ident(out_dir):
         return f"{out_dir}_{name}"
     return f"{out_dir}/{name}"
@@ -96,20 +104,40 @@ _NOT_FOUND_TOKENS = (
 )
 
 
-def completed_buckets(spark: SparkSession, out_dir: str, run_id: str) -> set[int]:
+def _committed(spark: SparkSession, out_dir: str, run_id: str) -> list:
+    """Distinct ``(bucket, transform)`` rows the run has committed. ONLY a
+    missing lineage sink means "fresh run": any other read failure raises,
+    or it would re-extract every committed bucket past the transform guard."""
     try:
-        lin = read_lineage(spark, out_dir)
-    except Exception as e:  # missing sink = fresh run; anything else raises
+        return (
+            read_lineage(spark, out_dir)
+            .filter(F.col("run_id") == run_id)
+            .select("bucket", "transform")
+            .distinct()
+            .collect()
+        )
+    except Exception as e:
         if not any(tok in str(e) for tok in _NOT_FOUND_TOKENS):
             raise
-        return set()
-    rows = lin.filter(F.col("run_id") == run_id).select("bucket").distinct().collect()
-    return {r.bucket for r in rows}
+        return []
+
+
+def _bucket_stats(df: DataFrame) -> dict[int, tuple[int, int, int]]:
+    """``bucket → (n_pages, n_ok, n_blocks)`` of extraction output: one
+    aggregate collected to the driver (at most ``n_buckets`` rows)."""
+    rows = (
+        df.groupBy("bucket")
+        .agg(
+            F.count("*").alias("n_pages"),
+            F.sum(F.col("success").cast("long")).alias("n_ok"),
+            F.sum(F.col("n_blocks").cast("long")).alias("n_blocks"),
+        )
+        .collect()
+    )
+    return {r.bucket: (r.n_pages, r.n_ok, r.n_blocks) for r in rows}
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
-    from .iceberg import _is_table_ident
-
     t = _child_target(out_dir, "_lineage")
     if _is_table_ident(t):
         return spark.read.table(t)
@@ -147,10 +175,14 @@ def run_extract_job(
     (MEMORY_AND_DISK) and sliced per group — right locally, but at 100 TB
     the extracted output is still O(corpus-text) and can exceed executor
     storage, which is exactly why the pruned path exists.
+
+    Each commit group runs exactly two writes: its extracted partitions,
+    then one driver-built lineage row per bucket of the group (zeros for an
+    empty bucket) from ``_bucket_stats`` — collected once per attempt on the
+    parquet path, once per group on the pruned path. ``wall_ms`` covers the
+    group's extraction (pruned path) plus its data write.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
-
-    from .iceberg import CATALOG, _is_table_ident, iceberg_available
 
     pruned = (
         source_table is not None
@@ -164,21 +196,9 @@ def run_extract_job(
     # would change, marking buckets "done" whose membership no longer
     # matches (pages skipped or doubled) and leaving stale rows behind
     # partition overwrites.
-    try:
-        lin = read_lineage(spark, out_dir).filter(F.col("run_id") == run_id)
-        if "transform" not in lin.columns:  # pre-round-3 lineage table
-            lin = lin.withColumn("transform", F.lit(None).cast("string"))
-        rows = lin.select("bucket", "transform").distinct().collect()
-    except Exception as e:
-        # ONLY a genuinely missing lineage sink means "fresh run"; a
-        # transient read failure must NOT silently restart from zero (it
-        # would re-extract every committed bucket and bypass the transform
-        # guard above)
-        if not any(tok in str(e) for tok in _NOT_FOUND_TOKENS):
-            raise
-        rows = []
-    done = {r.bucket for r in rows}
-    prior = {r.transform for r in rows if r.transform is not None}
+    committed = _committed(spark, out_dir, run_id)
+    done = {r.bucket for r in committed}
+    prior = {r.transform for r in committed if r.transform is not None}
     if prior and prior != {transform}:
         raise RuntimeError(
             f"run {run_id} has lineage committed under bucket transform "
@@ -241,8 +261,6 @@ def run_extract_job(
         # output to executor storage; the commit-group loop below then
         # writes + commits lineage from the cache. (A per-group filter of a
         # non-prunable source would mean n_groups full scans of the input.)
-        from pyspark.storagelevel import StorageLevel
-
         if docs is None:
             raise ValueError(
                 "docs is required unless source_table names an Iceberg table"
@@ -260,76 +278,45 @@ def run_extract_job(
         # group's wall_ms absorbs the whole job's extraction cost and
         # per-group timings are skewed (round-2 ADVICE)
         out_all.count()
+        stats = _bucket_stats(out_all)
 
         def group_output(chunk: list[int]) -> DataFrame:
             return out_all.filter(F.col("bucket").isin(chunk))
 
-    group_cache = None
+    lineage_target = _child_target(out_dir, "_lineage")
+    part = None
     try:
         for g in range(0, len(todo), group_size):
             chunk = todo[g : g + group_size]
             t0 = time.perf_counter()
             part = group_output(chunk)
             if pruned:
-                # the pruned group plan re-extracts from the source; it is
-                # consumed below by the write AND the stats aggregation
-                # (whose plan is referenced twice by the lineage anti-join)
-                # — persist so the mapInPandas extraction runs ONCE per
-                # group, not 2-3x. Unpersisted in the finally below so a
-                # failed group does not leak pinned executor storage.
-                from pyspark.storagelevel import StorageLevel
-
+                # the pruned group plan re-extracts from the source and is
+                # consumed by the stats collect AND the write — persist so
+                # the mapInPandas extraction runs ONCE per group (the collect
+                # fills the cache). Unpersisted in the finally below too, so
+                # a failed group does not leak pinned executor storage.
                 part = part.persist(StorageLevel.MEMORY_AND_DISK)
-                group_cache = part
-            else:
-                group_cache = None
+                stats = _bucket_stats(part)
             # Iceberg overwritePartitions when out_dir is a table identifier
             # (atomic metadata swap, one snapshot per commit group); dynamic
             # partition overwrite on the parquet path fallback
-            from .iceberg import overwrite_result_partitions
-
             overwrite_result_partitions(part, _child_target(out_dir, "extracted"))
             wall_ms = (time.perf_counter() - t0) * 1000.0
-            # per-bucket stats straight from the cached output — no re-read
-            stats = (
-                part.groupBy("bucket")
-                .agg(
-                    F.count("*").alias("n_pages"),
-                    F.sum(F.col("success").cast("long")).alias("n_ok"),
-                    F.sum(F.col("n_blocks").cast("long")).alias("n_blocks"),
-                )
-                .select(
-                    F.lit(run_id).alias("run_id"),
-                    F.col("bucket"),
-                    F.col("n_pages"),
-                    F.col("n_ok"),
-                    F.col("n_blocks"),
-                    F.lit(wall_ms).alias("wall_ms"),
-                    F.current_timestamp().alias("committed_at"),
-                    F.lit(transform).alias("transform"),
-                )
-            )
-            # buckets with zero pages still need a lineage row to be "committed"
-            empty = (
-                spark.createDataFrame(
-                    [
-                        (run_id, b, 0, 0, 0, wall_ms)
-                        for b in chunk
-                    ],
-                    "run_id string, bucket int, n_pages long, n_ok long, n_blocks long, wall_ms double",
-                )
-                .withColumn("committed_at", F.current_timestamp())
-                .withColumn("transform", F.lit(transform))
-            )
-            lineage = stats.unionByName(empty.join(stats, "bucket", "left_anti"))
-            t = _child_target(out_dir, "_lineage")
-            if _is_table_ident(t):  # Iceberg: append creates-or-appends
-                lineage.write.mode("append").saveAsTable(t)
+            committed_at = datetime.now(timezone.utc)
+            # every bucket of the group gets its row, empty ones included —
+            # a bucket is "committed" only once its lineage row exists
+            rows = [
+                (run_id, b, *stats.get(b, (0, 0, 0)), wall_ms, committed_at, transform)
+                for b in chunk
+            ]
+            lin = spark.createDataFrame(rows, LINEAGE_SCHEMA).write.mode("append")
+            if _is_table_ident(lineage_target):  # Iceberg: creates-or-appends
+                lin.saveAsTable(lineage_target)
             else:
-                lineage.write.mode("append").parquet(t)
-            if group_cache is not None:
-                group_cache.unpersist()
-                group_cache = None
+                lin.parquet(lineage_target)
+            if pruned:
+                part.unpersist()
             if fail_after_group is not None and g // group_size >= fail_after_group:
                 raise SimulatedFailure(
                     f"injected failure after commit group {g // group_size}"
@@ -337,14 +324,12 @@ def run_extract_job(
     finally:
         if out_all is not None:
             out_all.unpersist()
-        if group_cache is not None:  # a failed group must not leak its cache
-            group_cache.unpersist()
+        if pruned and part is not None:  # a failed group must not leak its cache
+            part.unpersist()
     return run_id
 
 
 def read_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
-    from .iceberg import _is_table_ident
-
     t = _child_target(out_dir, "extracted")
     if _is_table_ident(t):
         return spark.read.table(t)

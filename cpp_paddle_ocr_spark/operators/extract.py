@@ -14,8 +14,6 @@ The ``processRequest`` analog (``src/ocr_worker.cpp:213-311``) as one
 * optional single shuffle: salted url-hash repartition spreads pages —
   including the rare multi-MB ones — uniformly, which measured faster than
   confining big pages to dedicated range partitions (they serialize there);
-  ``plans.partitioning.size_routed_repartition`` remains available for
-  memory-constrained clusters;
 * ``mapInPandas`` — the only Python hop. Incoming Arrow batches are
   re-sliced to a byte budget so a run of adjacent big pages can never blow
   up executor memory (X3/X10 batch discipline);

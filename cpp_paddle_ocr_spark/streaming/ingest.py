@@ -11,7 +11,7 @@ Two forms:
   guards internally, so no union-of-branches is needed on the streaming
   plan).
 * ``run_stream_job`` — file-source → ``foreachBatch`` running the full
-  guarded batch operator (JVM-side guards + size routing). ``foreachBatch``
+  guarded batch operator (JVM-side guards + byte-budgeted batches). ``foreachBatch``
   is at-least-once, so the sink is made idempotent: output is partitioned by
   ``epoch_id`` and written with dynamic partition overwrite — a retried
   epoch REPLACES its own partition (extraction is deterministic, so the

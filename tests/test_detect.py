@@ -192,6 +192,23 @@ def test_stopword_feature_matches_python_semantics():
     assert got.tolist() == expected
 
 
+def test_stopwords_pack_into_int64():
+    # the packed-int64 stopword match holds only for ≤ 12 lowercase a-z
+    # chars (5 bits each, 60 bits total)
+    from cpp_paddle_ocr_spark.weights import STOPWORDS
+
+    assert all(
+        len(w) <= 12 and w.isascii() and w.islower() and w.isalpha()
+        for w in STOPWORDS
+    )
+
+
+def test_cls_table_ws_class_equals_ws_table():
+    from cpp_paddle_ocr_spark.core import detect as D
+
+    assert np.array_equal(D._CLS_TABLE == D._CLS_WS, D._WS_TABLE)
+
+
 def test_dilation_knob_merges_near_adjacent_runs():
     # D6 (src/ocr_det.cpp:155-159; OFF in the live config ocr_worker.cpp:33):
     # a single below-threshold token between two qualifying runs merges the

@@ -8,10 +8,10 @@ clean run, and no url is duplicated.
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from cpp_paddle_ocr_spark.lineage import (
     SimulatedFailure,
-    completed_buckets,
     read_extracted,
     read_lineage,
     run_extract_job,
@@ -51,7 +51,7 @@ def test_kill_and_resume(spark, docs, tmp_path_factory):
             spark, docs, out_b, run_id="r1", n_buckets=BUCKETS,
             n_groups=GROUPS, fail_after_group=1,
         )
-    done = completed_buckets(spark, out_b, "r1")
+    done = {r.bucket for r in read_lineage(spark, out_b).filter("run_id = 'r1'").collect()}
     assert 0 < len(done) < BUCKETS, "failure must land mid-job"
 
     # resume: only remaining buckets are processed
@@ -70,14 +70,42 @@ def test_kill_and_resume(spark, docs, tmp_path_factory):
     assert set(per_bucket) == set(range(BUCKETS))
     assert sum(r.n_pages for r in per_bucket.values()) == N
 
+    # per-bucket counts equal an independent aggregate of the final output
+    want = {
+        r.bucket: (r.n_pages, r.n_ok, r.n_blocks)
+        for r in read_extracted(spark, out_b)
+        .groupBy(F.pmod(F.xxhash64("url"), F.lit(BUCKETS)).alias("bucket"))
+        .agg(
+            F.count("*").alias("n_pages"),
+            F.sum(F.col("success").cast("long")).alias("n_ok"),
+            F.sum("n_blocks").alias("n_blocks"),
+        )
+        .collect()
+    }
+    assert {b: (r.n_pages, r.n_ok, r.n_blocks) for b, r in per_bucket.items()} == {
+        b: want.get(b, (0, 0, 0)) for b in range(BUCKETS)
+    }
+
 
 def test_rerun_completed_job_is_noop(spark, docs, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("noop"))
-    run_extract_job(spark, docs, out, run_id="x", n_buckets=8, n_groups=2)
-    m = make_metrics(spark)
-    run_extract_job(spark, docs, out, run_id="x", n_buckets=8, n_groups=2, metrics=m)
-    assert m["n_pages"].value == 0
-    assert len(_snapshot(spark, out)) == N
+    # the second input has more buckets than pages: an empty bucket still
+    # gets exactly one (all-zero) lineage row, or it would never commit
+    tiny = generate_documents(spark, 5, oversize_max=2_000_000)
+    for src, n, buckets in ((docs, N, 8), (tiny, 5, 16)):
+        out = str(tmp_path_factory.mktemp("noop"))
+        run_extract_job(spark, src, out, run_id="x", n_buckets=buckets, n_groups=2)
+        m = make_metrics(spark)
+        run_extract_job(
+            spark, src, out, run_id="x", n_buckets=buckets, n_groups=2, metrics=m
+        )
+        assert m["n_pages"].value == 0
+        assert len(_snapshot(spark, out)) == n
+        lin = read_lineage(spark, out).collect()
+        assert sorted(r.bucket for r in lin) == list(range(buckets))
+        assert sum(r.n_pages for r in lin) == n
+        empty = [r for r in lin if r.n_pages == 0]
+        assert len(empty) >= buckets - n
+        assert all((r.n_ok, r.n_blocks) == (0, 0) for r in empty)
 
 
 def test_single_source_scan_per_job(spark, tmp_path_factory):
