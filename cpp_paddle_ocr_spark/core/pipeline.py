@@ -32,7 +32,6 @@ from .classify import classify_spans
 from .decode import recognize_spans
 from .detect import Span, detect_page
 from .html_parse import parse_blocks
-from .order import sort_spans
 
 OUTPUT_COLUMNS = [
     "url",
@@ -173,10 +172,15 @@ def extract_batch_routed(
         k = len(spans)
         page_decoded = decoded[cursor : cursor + k]
         cursor += k
+        # O1 document-order sort: the reference ships sort_boxes
+        # (src/utility.cpp:315-327, (y, x) with a ±10px same-row tolerance)
+        # but never calls it; the north rule requires document order, so the
+        # sort is live here. In 1-D no tolerance is needed: (start,
+        # block_id) is a total, deterministic key.
         order = sorted(range(k), key=lambda i: (spans[i].start, spans[i].block_id))
         structs = []
         texts = []
-        for i in order:  # O1 document-order sort
+        for i in order:
             text, conf = page_decoded[i]
             text = text.strip()
             structs.append(_span_struct(spans[i], text, conf))

@@ -6,10 +6,11 @@ Iceberg CDC in production), the cascade runs incrementally, results append.
 
 Two forms:
 
-* ``extract_stream(stream_df)`` — stateless transform of a streaming
-  DataFrame via one ``mapInPandas`` (the pure ``extract_batch`` handles all
-  guards internally, so no union-of-branches is needed on the streaming
-  plan).
+* ``operators.extract.extract(stream_df)`` — the batch operator is already
+  a stateless streaming transform: its guard projection
+  (``prepare_routed``) is a plain select and, with ``num_partitions=None``,
+  it adds no shuffle, so a streaming DataFrame goes through one
+  ``mapInPandas`` unchanged.
 * ``run_stream_job`` — file-source → ``foreachBatch`` running the full
   guarded batch operator (JVM-side guards + byte-budgeted batches). ``foreachBatch``
   is at-least-once, so the sink is made idempotent: output is partitioned by
@@ -24,21 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.extract import _extract_fn, extract, prepare_routed
-from ..schemas import DOCUMENTS_SCHEMA, OUTPUT_SCHEMA
-
-
-def extract_stream(stream_df: DataFrame) -> DataFrame:
-    """Stateless streaming transform: pages → extraction rows.
-
-    ``prepare_routed`` is a plain projection (streaming-safe): it computes
-    the (html_size, route) columns the extraction payload requires and
-    blanks guard-row bytes before the Arrow channel, exactly like the batch
-    operator.
-    """
-    return prepare_routed(stream_df.select("url", "html")).mapInPandas(
-        _extract_fn(None), OUTPUT_SCHEMA
-    )
+from ..operators.extract import extract
+from ..schemas import DOCUMENTS_SCHEMA
 
 
 def run_stream_job(

@@ -73,74 +73,42 @@ def test_ivf_probe_covers_query_list_and_ranks_exact(spark, embeddings):
     assert again == [(r.vec_id, r.list_id, r.cosine) for r in ivf]
 
 
-def test_ivf_probe_is_broadcast(spark, embeddings):
-    # the fold (oracle) path keeps the broadcast probe join; the batched
-    # production path has NO join at all (asserted separately below)
-    from cpp_paddle_ocr_spark.operators.similarity import ivf_topk
-
-    plan = (
-        ivf_topk(embeddings, assign="fold")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Broadcast" in plan
-
-
 def test_ivf_assign_fold_vs_batched_agree(spark, embeddings):
-    # round-3 verdict #1: the production batched-matmul assignment must agree
-    # with the oracle-pinned sequential fold on argmax for every fixture row.
-    # Ties are the only divergence risk; the closed-form centroids make exact
-    # ties measure-zero — assert both (no ties, identical assignment).
+    # The batched matmul assignment sums in a different order than the
+    # oracle's sequential fold (IVF_ANN_SQL's list_sum), so scores may
+    # differ in the last ulp; argmax assignment can only diverge on an exact
+    # top tie. The closed-form centroids make such ties measure-zero: assert
+    # there are none on the fixture set, and that argmax matches a
+    # sequential left fold (0.0 + t0 + t1 + ...) for every row.
     import numpy as np
 
-    from cpp_paddle_ocr_spark.operators.similarity import (
-        N_CENTROIDS,
-        _centroid_dot,
-        _centroid_matrix,
-        ivf_scores_batched,
-    )
+    from cpp_paddle_ocr_spark.operators.similarity import DIM, _centroid_matrix
 
-    e = embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    fold = e.select(
-        "vec_id",
-        F.array(
-            *[F.expr(_centroid_dot("emb", j)) for j in range(N_CENTROIDS)]
-        ).alias("scores"),
-    )
-    fold_rows = {r.vec_id: list(r.scores) for r in fold.collect()}
-    batched = e.select("vec_id", ivf_scores_batched()(F.col("emb")).alias("scores"))
-    bat_rows = {r.vec_id: list(r.scores) for r in batched.collect()}
-    assert set(fold_rows) == set(bat_rows)
-    for vid, fs in fold_rows.items():
-        fa = np.asarray(fs)
-        ba = np.asarray(bat_rows[vid])
-        # no exact ties at the top in either scoring
-        assert np.sum(fa == fa.max()) == 1, vid
-        assert np.sum(ba == ba.max()) == 1, vid
-        assert int(fa.argmax()) == int(ba.argmax()), vid
-        # scores agree to float tolerance (only summation order differs)
-        assert np.allclose(fa, ba, rtol=1e-12, atol=1e-9), vid
+    rows = embeddings.select(
+        F.col("embedding").cast("array<double>").alias("emb")
+    ).collect()
+    emb = np.asarray([r.emb for r in rows], dtype=np.float64)
+    C = _centroid_matrix()
+    batched = emb @ C
+    fold = np.zeros_like(batched)
+    for i in range(DIM):
+        fold = fold + emb[:, i : i + 1] * C[i]
+    assert len(rows) > 0
+    for scores in (batched, fold):
+        top = scores.max(axis=1, keepdims=True)
+        assert ((scores == top).sum(axis=1) == 1).all()
+    assert (batched.argmax(axis=1) == fold.argmax(axis=1)).all()
+    assert np.allclose(batched, fold, rtol=1e-12, atol=1e-9)
 
 
-def test_ivf_topk_batched_default_matches_fold(spark, embeddings):
-    from cpp_paddle_ocr_spark.operators.similarity import ivf_topk
-
-    got_b = [(r.vec_id, r.list_id, r.cosine) for r in ivf_topk(embeddings).collect()]
-    got_f = [
-        (r.vec_id, r.list_id, r.cosine)
-        for r in ivf_topk(embeddings, assign="fold").collect()
-    ]
-    assert got_b == got_f
-    assert len(got_b) == 10
-
-
-def test_knn_join_matches_per_bucket_bruteforce(spark, embeddings):
+@pytest.mark.parametrize("n_planes, n_tables", [(8, 1), (12, 1), (12, 2)])
+def test_knn_join_matches_per_bucket_bruteforce(
+    spark, embeddings, n_planes, n_tables
+):
     # every row's reported neighbors must be exactly the top-k by rounded
     # cosine among its bucket peers (tie-break neighbor_id asc) — verified
-    # against an independent NumPy recomputation
+    # against an independent NumPy recomputation. With several tables the
+    # peer set is the union of the row's bucket peers across tables.
     import numpy as np
 
     from cpp_paddle_ocr_spark.operators.similarity import (
@@ -149,36 +117,48 @@ def test_knn_join_matches_per_bucket_bruteforce(spark, embeddings):
     )
 
     got = {}
-    for r in knn_join(embeddings, k=3).collect():
+    for r in knn_join(
+        embeddings, k=3, n_planes=n_planes, n_tables=n_tables
+    ).collect():
         got.setdefault(r.vec_id, []).append((r.knn_rank, r.neighbor_id, r.cosine))
     e = embeddings.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    ).withColumn("bucket", _bucket_col("emb"))
+    ).select(
+        "vec_id",
+        "emb",
+        *[
+            _bucket_col("emb", n_planes, table=t).alias(f"b{t}")
+            for t in range(n_tables)
+        ],
+    )
     rows = e.collect()
-    by_bucket: dict[int, list] = {}
+    vecs = {r.vec_id: np.asarray(r.emb, dtype=np.float64) for r in rows}
+    by_bucket: dict[tuple[int, int], list] = {}
     for r in rows:
-        by_bucket.setdefault(r.bucket, []).append(
-            (r.vec_id, np.asarray(r.emb, dtype=np.float64))
-        )
-    exp = {}
+        for t in range(n_tables):
+            by_bucket.setdefault((t, r[f"b{t}"]), []).append(r.vec_id)
+    peers: dict[int, set] = {vid: set() for vid in vecs}
     for members in by_bucket.values():
-        for vid, v in members:
-            cands = []
-            for nid, u in members:
-                if nid == vid:
-                    continue
-                c = round(
-                    float(v @ u)
-                    / (float(np.sqrt(v @ v)) * float(np.sqrt(u @ u))),
-                    6,
-                )
-                cands.append((-c, nid))
-            cands.sort()
-            if cands:
-                exp[vid] = [
-                    (i + 1, nid, -negc)
-                    for i, (negc, nid) in enumerate(cands[:3])
-                ]
+        for vid in members:
+            peers[vid].update(members)
+    exp = {}
+    for vid, v in vecs.items():
+        cands = []
+        for nid in peers[vid] - {vid}:
+            u = vecs[nid]
+            c = round(
+                float(v @ u)
+                / (float(np.sqrt(v @ v)) * float(np.sqrt(u @ u))),
+                6,
+            )
+            cands.append((-c, nid))
+        cands.sort()
+        if cands:
+            exp[vid] = [
+                (i + 1, nid, -negc)
+                for i, (negc, nid) in enumerate(cands[:3])
+            ]
+    assert exp  # the geometry still yields candidate pairs here
     assert set(got) == set(exp)
     mismatches = 0
     for vid in exp:
@@ -222,17 +202,6 @@ def test_knn_join_ivf_method_runs_and_is_deterministic(spark, embeddings):
     assert a == b and len(a) > 0
 
 
-def test_knn_join_engines_agree(spark, embeddings):
-    # the per-bucket matmul engine and the oracle-pinned expression engine
-    # must produce identical rows (both round half-up at 6 dp; bucket
-    # membership is the deterministic unrolled plane-dot either way)
-    from cpp_paddle_ocr_spark.operators.similarity import knn_join
-
-    b = sorted(map(tuple, knn_join(embeddings, k=4).collect()))
-    e = sorted(map(tuple, knn_join(embeddings, k=4, engine="expr").collect()))
-    assert b == e and len(b) > 0
-
-
 def test_ivf_topk_batched_plan_has_no_join(spark, embeddings):
     # the production single-query IVF resolves probes driver-side: the plan
     # must be a filtered scan + sort, with no join operator at all
@@ -245,12 +214,12 @@ def test_ivf_topk_batched_plan_has_no_join(spark, embeddings):
 def test_ivf_topk_missing_query_id_empty_both_engines(spark, embeddings):
     from cpp_paddle_ocr_spark.operators.similarity import ivf_topk
 
-    for assign in ("batched", "fold"):
-        out = ivf_topk(embeddings, query_vec_id=10_000_000, assign=assign)
-        assert out.count() == 0, assign
-        assert [f.name for f in out.schema.fields] == [
-            "vec_id", "list_id", "cosine",
-        ], assign
+    with pytest.warns(UserWarning, match="not found"):
+        out = ivf_topk(embeddings, query_vec_id=10_000_000)
+    assert out.count() == 0
+    assert [f.name for f in out.schema.fields] == [
+        "vec_id", "list_id", "cosine",
+    ]
 
 
 def test_round_half_up_6_matches_shortest_repr_decimal():
@@ -356,24 +325,6 @@ def test_ivf_query_vec_bypasses_plan_time_lookup(spark, embeddings):
     assert out.collect() == baseline
 
 
-def test_knn_join_engines_agree_at_nondefault_width(spark, embeddings):
-    """The geometry parameterization must hold beyond the oracle default:
-    at 12 planes (4096 buckets) both engines still produce the identical
-    (vec_id, neighbor_id, cosine, knn_rank) set."""
-    from cpp_paddle_ocr_spark.operators.similarity import knn_join
-
-    def rows(engine):
-        return {
-            (r.vec_id, r.neighbor_id, r.cosine, r.knn_rank)
-            for r in knn_join(embeddings, engine=engine, n_planes=12).collect()
-        }
-
-    got_b = rows("batched")
-    got_e = rows("expr")
-    assert got_b == got_e
-    assert got_b  # 12-plane bucketing still yields candidate pairs here
-
-
 def _knn_pairs(df):
     return {(r.vec_id, r.neighbor_id) for r in df.collect()}
 
@@ -394,7 +345,7 @@ def test_knn_join_multi_table_recall(spark, embeddings):
     e = embeddings.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     ).withColumn("key", F.lit(0))
-    truth = _knn_pairs(_knn_one_table(e, 5, 10**9, "batched"))
+    truth = _knn_pairs(_knn_one_table(e, 5, 10**9))
 
     one = _knn_pairs(knn_join(embeddings, n_planes=12, n_tables=1))
     three = _knn_pairs(knn_join(embeddings, n_planes=12, n_tables=3))
@@ -404,20 +355,6 @@ def test_knn_join_multi_table_recall(spark, embeddings):
     # tables probe genuinely different bucketings — pre-round-5 this
     # assertion would fail, since every table hashed identically
     assert r3 > r1, (r1, r3)
-
-
-def test_knn_join_multi_table_engines_agree(spark, embeddings):
-    from cpp_paddle_ocr_spark.operators.similarity import knn_join
-
-    def rows(engine):
-        return {
-            (r.vec_id, r.neighbor_id, r.cosine, r.knn_rank)
-            for r in knn_join(
-                embeddings, engine=engine, n_planes=12, n_tables=2
-            ).collect()
-        }
-
-    assert rows("batched") == rows("expr")
 
 
 def test_auto_n_planes_formula():
@@ -477,7 +414,7 @@ def test_knn_join_ivf_nprobe_recall(spark, embeddings):
     e = embeddings.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     ).withColumn("key", F.lit(0))
-    truth = _knn_pairs(_knn_one_table(e, 5, 10**9, "batched"))
+    truth = _knn_pairs(_knn_one_table(e, 5, 10**9))
 
     p1 = _knn_pairs(knn_join(embeddings, method="ivf", nprobe=1))
     p2 = _knn_pairs(knn_join(embeddings, method="ivf", nprobe=2))
